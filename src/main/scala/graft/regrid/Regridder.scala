@@ -2,6 +2,7 @@ package graft.regrid
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Interpolation method (reference `xesmf/backend.py:241-246`). */
 sealed abstract class RegridMethod(val name: String, val needBounds: Boolean)
@@ -276,10 +277,11 @@ final class Regridder(
 
   private var weightsInit = false
   private var slabApplierInit = false
+  private var cscApplierInit = false
   private var closed = false
 
-  /** Release the cached weights relation AND the dense kernel's
-    * broadcast COO arrays — the analog of the reference's
+  /** Release the cached weights relation AND both kernels' broadcast
+    * copies of W — the analog of the reference's
     * `esmf_regrid_finalize`, `backend.py:333-357`, which likewise frees
     * the native regrid object. No-op for parts never built; the
     * regridder is unusable afterwards ([[apply]] errors instead of
@@ -287,6 +289,7 @@ final class Regridder(
   def close(): Unit = if (!closed) {
     if (weightsInit) { weights.unpersist(); () }
     if (slabApplierInit) slabApplier.close()
+    if (cscApplierInit) cscApplier.foreach(_.close())
     closed = true
   }
 
@@ -350,13 +353,35 @@ final class Regridder(
     a
   }
 
-  /** Regrid a field. Two input shapes, auto-detected:
-    *  - tall relational `(cell_id, [extraDims...], [valueCols...])` →
-    *    join-agg kernel, output in the same tall shape;
+  /** Tall-field kernel, built on the first tall apply that can use it
+    * (collect + broadcast of a col-sorted W, held for the regridder's
+    * lifetime like [[slabApplier]]). None when W is empty or over the
+    * replicate-W ceiling: such weights always take [[Apply.regrid]]. */
+  private[regrid] lazy val cscApplier: Option[CscApplier] = {
+    val a = CscApplier.build(weights, gridOut.cells(spark, withBounds = false), gridOut.nCells)
+    cscApplierInit = true
+    a
+  }
+
+  /** Regrid a field. The field's shape picks the input form, and the
+    * route follows from it (see [[Apply]]):
     *  - dense slab-major `(slab_id, values ARRAY<DOUBLE>)` (one row per
     *    extra-dim combo, index = cell_id — see [[Apply.toSlabs]]) →
-    *    broadcast-W dense scatter, ~an order of magnitude faster for
-    *    raster fields with many slabs. */
+    *    [[slabApplier]], W's COO arrays broadcast once, a dense scatter
+    *    per slab; the fastest form for raster fields with many slabs;
+    *  - tall relational `(cell_id, [extraDims...], [valueCols...])`,
+    *    output in the same tall shape:
+    *    - with `broadcastWeights` (the default), an integral `cell_id`
+    *      and a non-empty W within the replicate-W ceiling
+    *      ([[SlabApplier.defaultMaxTriplets]]) → [[CscApplier]]: W's
+    *      col-sorted copy is broadcast once, on the first such apply,
+    *      and each apply is one pass over the field plus the sum's
+    *      one shuffle;
+    *    - otherwise → [[Apply.regrid]]'s join + aggregate, which
+    *      derives its padding and join side from W on every call.
+    *
+    * Both tall routes return the same rows; `validate` runs the same
+    * shape check (reference `smm.py:77-86`) on either. */
   def apply(field: DataFrame,
             extraDims: Seq[String] = Nil,
             valueCols: Seq[String] = Seq("value"),
@@ -372,8 +397,21 @@ final class Regridder(
         "slab-major input supports none of extraDims/valueCols/validate " +
           "(extra dims are packed into slab_id; shape is checked inside the kernel)")
       slabApplier.apply(field)
-    } else Apply.regrid(weights, field, gridOut.cells(spark, withBounds = false),
-      extraDims, valueCols, broadcastWeights, validate = validate)
+    } else {
+      // the index is keyed by a long cell id; any other id type keeps
+      // the join's own comparison semantics
+      val integralIds = field.schema.exists(f => f.name == "cell_id" && (f.dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }))
+      (if (broadcastWeights && integralIds) cscApplier else None) match {
+        case Some(k) =>
+          if (validate) Apply.requireShape(weights, field)
+          k.apply(field, extraDims, valueCols)
+        case None => Apply.regrid(weights, field, gridOut.cells(spark, withBounds = false),
+          extraDims, valueCols, broadcastWeights, validate = validate)
+      }
+    }
   }
 
   /** Regrid and attach output-grid coordinates + method metadata

@@ -1358,4 +1358,147 @@ class RegridSpec extends AnyFunSuite {
     assert(out.count() === 3)
     assert(out.selectExpr("max(size(values))").head().getInt(0) === gridOut.nCells.toInt)
   }
+
+  /** A tall (time, lev) field over `gridIn` with two value columns: v1
+    * is NULL on every seventh cell, v2 never; plus rows whose cell ids
+    * lie outside the weights' col range on both sides. */
+  def tallField: DataFrame = {
+    val f = waveIn
+      .crossJoin(spark.range(1, 3).toDF("time"))
+      .crossJoin(spark.range(1, 4).toDF("lev").select(col("lev").cast("int")))
+      .select(col("cell_id"), col("time"), col("lev"),
+        when(col("cell_id") % 7 === 0, lit(null).cast("double"))
+          .otherwise(col("time") * col("lev") * col("value")).as("v1"),
+        (col("value") + col("lev")).as("v2"))
+    val outside = f.filter(col("cell_id") < 3)
+      .withColumn("cell_id", when(col("cell_id") === 0, lit(-5L))
+        .otherwise(col("cell_id") + gridIn.nCells + 100))
+    f.unionByName(outside)
+  }
+
+  /** Both sides hold the same rows (multiset) under the same column
+    * names and types; nullability flags may differ. */
+  def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    def cols(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(cols(got) === cols(want), what)
+    assert(got.count() === want.count(), what)
+    assert(got.exceptAll(want).count() === 0, what)
+    assert(want.exceptAll(got).count() === 0, what)
+  }
+
+  test("tall Regridder.apply on the CSC kernel == Apply.regrid, row for row") {
+    val dims = Seq("time", "lev")
+    val vals = Seq("v1", "v2")
+    val f = tallField.cache()
+    // bilinear, non-periodic: the seam destinations are unmapped (K2)
+    val r = new Regridder(spark, RectDef(gridIn), RectDef(gridOut), RegridMethod.Bilinear)
+    val viaCsc = r.apply(f, dims, vals)
+    assert(r.cscApplier.isDefined)
+    assert(viaCsc.queryExecution.executedPlan.toString.contains("graft_csc_lookup"))
+    val want = Apply.regrid(r.weights, f, dstCells(), dims, vals)
+    assertSameRows(viaCsc, want, "bilinear, two dims, two values, NULLs, outside cells")
+    // every destination × (time, lev) combo surfaces, unmapped ones as 0.0
+    assert(viaCsc.count() === gridOut.nCells * 2 * 3)
+    assert(viaCsc.filter(col("v2") === 0.0).count() > 0)
+    // the interpreted lookup (no whole-stage codegen) gives the same rows
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try {
+      val interpreted = r.apply(f, dims, vals)
+      assert(interpreted.queryExecution.executedPlan.toString.contains("graft_csc_lookup"))
+      assertSameRows(interpreted, want, "interpreted lookup")
+    } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+
+    // broadcastWeights = false falls back to the shuffled join
+    val shuffled = r.apply(f, dims, vals, broadcastWeights = false)
+    assert(!shuffled.queryExecution.executedPlan.toString.contains("graft_csc_lookup"))
+    assertSameRows(shuffled, want, "broadcastWeights = false")
+    // a non-integral cell_id keeps the join's comparison semantics
+    val fd = f.withColumn("cell_id", col("cell_id").cast("double"))
+    val viaJoin = r.apply(fd, dims, vals)
+    assert(!viaJoin.queryExecution.executedPlan.toString.contains("graft_csc_lookup"))
+    assertSameRows(viaJoin, Apply.regrid(r.weights, fd, dstCells(), dims, vals), "double cell ids")
+
+    // validate = true still runs the dangling-column check
+    intercept[IllegalArgumentException] {
+      r.apply(f.filter(col("cell_id") < 100), dims, vals, validate = true)
+    }
+    assert(r.apply(f, dims, vals, validate = true).count() === gridOut.nCells * 2 * 3)
+
+    // locstream source, nearest_d2s: 476 of 480 destinations unmapped
+    val locs4 = graft.RegridQueries.locs4
+    val pts = Grids.locstream(spark, locs4).select(col("cell_id"),
+      TestFields.waveSmooth(col("lon"), col("lat")).as("value"))
+    val rl = new Regridder(spark, LocDef(locs4), RectDef(gridOut), RegridMethod.NearestD2S)
+    val loc = rl.apply(pts)
+    assert(rl.cscApplier.isDefined)
+    assertSameRows(loc, Apply.regrid(rl.weights, pts, dstCells()), "locstream nearest_d2s")
+    assert(loc.filter(col("value") === 0.0).count() === gridOut.nCells - 4)
+    Seq(r, rl).foreach(_.close())
+    f.unpersist()
+  }
+
+  test("tall Regridder.apply with EMPTY weights falls back to Apply.regrid: all zeros") {
+    // disjoint regional grids: bilinear finds no source quad at all
+    val src = RectGrid.of(0, 10, 1, 0, 10, 1)
+    val dst = RectGrid.of(100, 120, 2, 50, 60, 2)
+    val r = new Regridder(spark, RectDef(src), RectDef(dst), RegridMethod.Bilinear)
+    val f = Grids.cells(spark, src, false).select(col("cell_id"), lit(1.0).as("value"))
+    val out = r.apply(f)
+    assert(r.weights.count() === 0)
+    assert(r.cscApplier.isEmpty)
+    assert(out.count() === dst.nCells)
+    assert(out.filter(col("value") =!= 0.0).count() === 0)
+    r.close()
+  }
+
+  test("warm tall apply: no weight work — no broadcast, one shuffle, no W collect job") {
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def exchanges(df: DataFrame): (Int, Int) = {
+      val plan = df.queryExecution.executedPlan
+      (Plans.collect(plan) { case e: ShuffleExchangeLike => e }.size,
+        Plans.collect(plan) { case e: BroadcastExchangeLike => e }.size)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    def jobsOf(action: => Unit): Int = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      action
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get
+    }
+    val dims = Seq("time", "lev")
+    val f = tallField.cache()
+    f.count()
+    val r = new Regridder(spark, RectDef(gridIn), RectDef(gridOut), RegridMethod.Bilinear)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      r.apply(f, dims, Seq("v1")).collect()          // cold: builds the CSC index
+      val warm = r.apply(f, dims, Seq("v1"))
+      val warmJobs = jobsOf(warm.collect())
+      assert(exchanges(warm) === ((1, 0)), warm.queryExecution.executedPlan.toString)
+      // the same action over a plain one-shuffle aggregate of the field
+      // runs as many jobs: nothing of W is collected or broadcast
+      val plainJobs = jobsOf(f.groupBy(dims.map(col): _*).agg(sum("v1")).collect())
+      assert(warmJobs === plainJobs)
+      // the per-call route re-derives W: a broadcast and extra jobs
+      val perCall = Apply.regrid(r.weights, f, dstCells(), dims, Seq("v1"))
+      assert(jobsOf(perCall.collect()) > warmJobs)
+      assert(exchanges(perCall)._2 > 0)
+
+      // close() destroys the broadcast index; later applies error
+      val csc = r.cscApplier.get
+      r.close()
+      val e = intercept[IllegalArgumentException] { r.apply(f, dims, Seq("v1")) }
+      assert(e.getMessage.contains("closed"))
+      intercept[Exception] { csc.apply(f, dims, Seq("v1")).collect() }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      f.unpersist()
+    }
+  }
 }
